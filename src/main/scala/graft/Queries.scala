@@ -9,6 +9,7 @@ import graft.llm.{Bpe, Dedup, ExactSubstr, Mixing, Similarity, TextAnalysis}
 import graft.operators.{Skew, Upsert, WpLoad, WpReaders}
 import graft.sinks.Sinks
 import graft.sources.Sources
+import graft.util.{Generations, Par}
 
 /** The registered query inventory — one entry per implemented operator
   * from SURVEY.md §2 (+ the LLM-pipeline extensions), each with a
@@ -41,30 +42,6 @@ object Queries {
   private def tmpDir(dir: String, name: String): String = {
     val sf = dir.replaceAll("[^0-9a-zA-Z.]", "_")
     s"/tmp/graft_q/$sf/$name"
-  }
-
-  /** Run INDEPENDENT side-effect stages concurrently (optimization
-    * guide §2.6 — Spark's scheduler happily runs several jobs at once;
-    * composite store-building queries measured 30-40% inter-job DRIVER
-    * gaps when the builds run strictly sequentially, so overlapping
-    * them lets one stage's planning/commit overlap another's
-    * execution and back-fills the executor pool that each tiny stage
-    * underuses on its own). Only for stages that touch DISJOINT
-    * output directories and share no frame mutation — results are
-    * identical to the sequential composition by construction. The
-    * first failure propagates with its original exception (a failed
-    * build must surface exactly as it would sequentially). */
-  private def inParallel(stages: (() => Unit)*): Unit = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(stages.size)
-    try {
-      val futs = stages.map(f => pool.submit(
-        new java.util.concurrent.Callable[Unit] { def call(): Unit = f() }))
-      futs.foreach { fu =>
-        try fu.get()
-        catch { case e: java.util.concurrent.ExecutionException =>
-          throw e.getCause }
-      }
-    } finally pool.shutdown()
   }
 
   // ---- oracle SQL builders ------------------------------------------------
@@ -3640,7 +3617,7 @@ object Queries {
       // concurrently (§2.6) and union in phase order
       val frames =
         new Array[org.apache.spark.sql.DataFrame](mixPhasesFixture.size)
-      inParallel(mixPhasesFixture.zipWithIndex.map { case (_, i) =>
+      Par.inParallel(mixPhasesFixture.zipWithIndex.map { case (_, i) =>
         () => {
           val phaseDocs = docs.join(
             sched.where(col("phase_idx") === i).select(col("doc_id")),
@@ -7531,7 +7508,7 @@ object Queries {
       val docs = seedRetractFixture(s, d, dir)
       // shard materialization and the optout/store landings are
       // independent (disjoint dirs) — §2.6
-      inParallel(
+      Par.inParallel(
         () => graft.sinks.Sinks.runChain(docs, Seq(
           graft.pipeline.ConfigLoader.loadKinds("materialize_shards")(Map(
             "assignmentDir" -> s"$dir/assign", "idCol" -> "doc_id",
@@ -7601,7 +7578,7 @@ object Queries {
       val docs = seedRetractFixture(s, d, dir)
       // shard materialization and the store landing are independent
       // (disjoint dirs) — §2.6
-      inParallel(
+      Par.inParallel(
         () => graft.sinks.Sinks.runChain(docs, Seq(
           graft.pipeline.ConfigLoader.loadKinds("materialize_shards")(Map(
             "assignmentDir" -> s"$dir/assign", "idCol" -> "doc_id",
@@ -7682,7 +7659,7 @@ object Queries {
       // output, so the composition is order-free — sequential builds
       // measured 50 s wall / 30 s job time (369 tiny jobs, the rest
       // driver gaps); overlapping them fills the gaps and the pool
-      inParallel(
+      Par.inParallel(
         () => graft.sinks.Sinks.runChain(docs, Seq(
           graft.pipeline.ConfigLoader.loadKinds("materialize_shards")(Map(
             "assignmentDir" -> s"$dir/assign", "idCol" -> "doc_id",
@@ -7822,12 +7799,8 @@ object Queries {
       val vecRows = s.read.parquet(s"$dir/ann/assignments").count()
       val packsDocs = s.read.parquet(s"$dir/out/data")
         .agg(sum(col("n_docs"))).head().getLong(0)
-      val fs = new org.apache.hadoop.fs.Path(s"$dir/trace")
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      val traceGens = fs
-        .listStatus(new org.apache.hadoop.fs.Path(s"$dir/trace"))
-        .count(st => st.isDirectory && st.getPath.getName.startsWith("gen-"))
-        .toLong
+      val traceGens =
+        Generations.children(s, s"$dir/trace", "gen-").size.toLong
       val sftDocs = s.read.parquet(s"$dir/sft/out/data")
         .agg(sum(col("n_docs"))).head().getLong(0)
       Seq(("lexical_n", lexN), ("packs_docs", packsDocs),
@@ -7975,7 +7948,7 @@ object Queries {
     val p = new org.apache.hadoop.fs.Path(dir)
     p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
     // the turn store and the ownership store are independent — §2.6
-    inParallel(
+    Par.inParallel(
       () => sftTurns(s, d).write.mode("overwrite").parquet(s"$dir/turns"),
       // conversation ownership — the mapping a legal request resolves
       // through; string user ids (the opt-out registry shape)
@@ -12387,7 +12360,7 @@ object Queries {
         // end (guide §2.6); each chain's sweeps stay sequential
         var prOpt: Option[org.apache.spark.sql.DataFrame] = None
         var trOpt: Option[org.apache.spark.sql.DataFrame] = None
-        inParallel(
+        Par.inParallel(
           () => {
             graft.llm.LinkGraph.pageRankTrace(base, iters = 3, prDir,
               orderedFold = true)
@@ -13285,7 +13258,7 @@ object Queries {
       val p = new org.apache.hadoop.fs.Path(dir)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
       // the two index builds are independent (disjoint dirs) — §2.6
-      inParallel(
+      Par.inParallel(
         () => graft.llm.Search.buildPostings(t(s, d, "documents"),
           s"$dir/bm25"),
         () => graft.llm.Similarity.buildIvfIndex(
@@ -13319,7 +13292,7 @@ object Queries {
       val embs = t(s, d, "embeddings")
         .select(col("vec_id"), col("embedding"))
       // the two index builds are independent (disjoint dirs) — §2.6
-      inParallel(
+      Par.inParallel(
         () => graft.llm.Search.buildPostings(t(s, d, "documents"),
           s"$dir/bm25"),
         () => graft.llm.Similarity.buildIvfPqIndex(embs, s"$dir/ann"))
@@ -13350,7 +13323,7 @@ object Queries {
       val bench = hybridBench(s, d)
       // both index builds and the stream-schema seed are independent
       // (disjoint output dirs) — §2.6
-      inParallel(
+      Par.inParallel(
         () => graft.llm.Search.buildPostings(t(s, d, "documents"),
           s"$dir/bm25"),
         () => graft.llm.Similarity.buildIvfIndex(

@@ -99,10 +99,6 @@ object Fns {
       try_to_timestamp(c),
       current_timestamp())
 
-  /** F13 (GMT variant): derive the GMT timestamp from a local one.
-    * Reference: WPPostsLoader.php:205-227. */
-  def toGmt(c: Column, tz: String): Column = to_utc_timestamp(c, tz)
-
   // --------------------------------------------------------------------
   // F14 — DateTime -> ISO-8601/ATOM string on output.
   // Reference: EntryNormalizer.php:21; WordPressPostLoader.php:50.
@@ -195,9 +191,6 @@ object Fns {
   def asLongIfIntegral(c: Column): Column =
     when(c.rlike("^-?\\d+$"), c.cast("long"))
 
-  def asDoubleIfNumeric(c: Column): Column =
-    when(c.rlike("^-?\\d+(\\.\\d+)?$"), c.cast("double"))
-
   def numericTag(c: Column): Column =
     when(c.rlike("^-?\\d+$"), lit("long"))
       .when(c.rlike("^-?\\d+\\.\\d+$"), lit("double"))
@@ -241,26 +234,16 @@ object Fns {
   // F11 — simple_transformer: arbitrary function over the whole Row — the
   // UDF escape hatch. Reference: SimpleTransformer.php:45-51, DSL
   // functions.php:64-66. Callers pass a Scala fn over Row applied to
-  // struct(cols); the constant-map convenience mirrors the reference's
-  // most common use (`{'etl_pipeline': class}` WordPressUserPipeline
-  // .php:169-176) without any UDF at all.
+  // struct(cols).
   // --------------------------------------------------------------------
   def simpleTransformer(fn: org.apache.spark.sql.Row => String, cols: Seq[Column]): Column = {
     val u = udf(fn)
     u(struct(cols: _*))
   }
 
-  /** Constant-map convenience: `map('k1','v1',...)` as a literal column. */
-  def constantMap(entries: Map[String, String]): Column = {
-    val pairs = entries.toSeq.flatMap { case (k, v) => Seq(lit(k), lit(v)) }
-    map(pairs: _*)
-  }
-
   // --------------------------------------------------------------------
-  // F5/F6 conveniences (now(), uuid_v4()) — direct builtins.
-  // Reference: Load/Orchestrator.php:100 (uuid), WordPressPostPipeline
-  // .php:243 (now).
+  // F6 convenience (uuid_v4()) — a direct builtin.
+  // Reference: Load/Orchestrator.php:100.
   // --------------------------------------------------------------------
-  def nowTs: Column = current_timestamp()
   def uuidV4: Column = expr("uuid()")
 }

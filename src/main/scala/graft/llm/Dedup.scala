@@ -193,15 +193,6 @@ object Dedup {
     when(union === 0d, 0d).otherwise(inter / union)
   }
 
-  /** MinHash signature as a Column expression: sig[i] = min over
-    * shingles of hash_i(shingle). NOTE: higher-order functions are
-    * interpreted (no codegen) and re-evaluate the shingles expression
-    * per seed — use [[minhashSignatures]] (the DataFrame form) for
-    * corpus-scale work; this form is for small/ad-hoc use. */
-  def minhashSignature(shinglesCol: Column, k: Int = 64): Column =
-    transform(sequence(lit(0), lit(k - 1)),
-      i => array_min(transform(shinglesCol, s => xxhash64(s, i))))
-
   /** MinHash signatures, vectorized: explode shingles to rows and run k
     * codegen'd `min(xxhash64(sh, seed))` aggregates with map-side
     * combine. Wholly inside WholeStageCodegen — measured >50× faster

@@ -302,32 +302,11 @@ object LinkGraph {
 
   // ---- incremental rank refresh: per-sweep trace + delta frontier ----
 
-  private val TraceCommit = "_graft_trace_committed"
-
-  private def traceFs(spark: org.apache.spark.sql.SparkSession,
-                      dir: String) =
-    new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Latest COMMITTED generation under `dir`, by PARSED generation
-    * number — past the %04d padding `gen-10000` must outrank
-    * `gen-9999` (a lexical sort would silently chain refreshes off a
-    * stale generation); non-numeric names are ignored, matching
-    * [[nextTraceGen]]'s numeric parse. */
-  private def latestTraceGen(spark: org.apache.spark.sql.SparkSession,
-                             dir: String): Option[String] = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = traceFs(spark, dir)
-    if (!fs.exists(p)) return None
-    val gens = fs.listStatus(p)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("gen-")
-        && st.getPath.getName.stripPrefix("gen-").forall(_.isDigit)
-        && st.getPath.getName.stripPrefix("gen-").nonEmpty
-        && fs.exists(new org.apache.hadoop.fs.Path(st.getPath, TraceCommit)))
-    if (gens.isEmpty) None
-    else Some(gens.maxBy(
-      _.getPath.getName.stripPrefix("gen-").toInt).getPath.toString)
-  }
+  /** The trace's [[graft.util.Generations]]: each trace/refresh lands
+    * a whole `gen-NNNN`, marker last, and refreshes chain off the
+    * latest committed one. */
+  private val Gens =
+    graft.util.Generations("_graft_trace_committed", first = 0)
 
   /** Overlapped trace-artifact writes (optimization guide §2.6): a
     * traced run's persisted artifacts (edges/outw/base/meta and each
@@ -352,19 +331,6 @@ object LinkGraph {
         catch { case e: java.util.concurrent.ExecutionException =>
           throw e.getCause }
       } finally pool.shutdown()
-  }
-
-  private def nextTraceGen(spark: org.apache.spark.sql.SparkSession,
-                           dir: String): String = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = traceFs(spark, dir)
-    val next = if (!fs.exists(p)) 0
-      else fs.listStatus(p).map(_.getPath.getName)
-        .filter(n => n.startsWith("gen-")
-          && n.stripPrefix("gen-").nonEmpty
-          && n.stripPrefix("gen-").forall(_.isDigit))
-        .map(_.stripPrefix("gen-").toInt).foldLeft(-1)(math.max) + 1
-    f"$dir/gen-$next%04d"
   }
 
   /** Shared trace writer behind [[pageRankTrace]] / [[trustRankTrace]]:
@@ -412,7 +378,7 @@ object LinkGraph {
         nodes.select(col("node"),
           lit((1.0 - damping) / n).as("__base"), lit(1.0 / n).as("rank"))
     }).localCheckpoint()
-    val gen = nextTraceGen(spark, traceDir)
+    val gen = Gens.next(spark, traceDir)
     // every artifact below derives from checkpointed frames and is
     // read only by later maintenance runs — write them on the side
     // pool so the sweep loop never waits on a parquet commit; the
@@ -434,8 +400,7 @@ object LinkGraph {
       (t, r) =>
         w.submit(r.write.mode("overwrite").parquet(f"$gen/sweep-$t%04d")))
     w.await()
-    val m = new org.apache.hadoop.fs.Path(gen, TraceCommit)
-    traceFs(spark, traceDir).create(m, true).close()
+    Gens.commit(spark, gen)
     out
   }
 
@@ -505,7 +470,7 @@ object LinkGraph {
     require(deltaBroadcastLimit >= 1,
       s"pageRankRefresh: deltaBroadcastLimit must be >= 1, got " +
         deltaBroadcastLimit)
-    val gen = latestTraceGen(spark, traceDir).getOrElse(
+    val gen = Gens.resolve(spark, traceDir).getOrElse(
       throw new IllegalArgumentException(
         s"pageRankRefresh: no committed trace generation under $traceDir" +
           " — run pageRankTrace first"))
@@ -517,7 +482,7 @@ object LinkGraph {
     // pre-mode traces (no `mode` column / base frame) are uniform-base
     val mode = if (meta.schema.fieldNames.contains("mode"))
       meta.getAs[String]("mode") else "pagerank"
-    val fs = traceFs(spark, traceDir)
+    val fs = graft.util.Generations.fsOf(spark, traceDir)
     def genHas(name: String): Boolean =
       fs.exists(new org.apache.hadoop.fs.Path(s"$gen/$name"))
     def fullTrace(merged: DataFrame): DataFrame = mode match {
@@ -602,7 +567,7 @@ object LinkGraph {
     val sources = deltaAgg.select(col("src").as("node")).distinct()
       .localCheckpoint()
     val base = (1.0 - damping) / n
-    val genNew = nextTraceGen(spark, traceDir)
+    val genNew = Gens.next(spark, traceDir)
     // the generation's carried artifacts and per-sweep frames are read
     // only by LATER refreshes (each sweep below reads the OLD gen's
     // frames and its own checkpointed `patched`) — write them on the
@@ -684,26 +649,21 @@ object LinkGraph {
       frontier = affected
     }
     w.await()
-    val m = new org.apache.hadoop.fs.Path(genNew, TraceCommit)
-    traceFs(spark, traceDir).create(m, true).close()
+    Gens.commit(spark, genNew)
     patched
   }
 
   /** Garbage-collect RETIRED trace generations — each one is a full
     * copy of the edge list plus iters + 1 node frames, so a
     * long-running refresh chain vacuums after the new generation has
-    * soaked (the [[graft.llm.Similarity.vacuumIndex]] trade: rollback
-    * after a vacuum means re-tracing, not marker deletion). Deletes
-    * every RETIRED generation: committed ones older than the serving
-    * generation unconditionally, and UNCOMMITTED stragglers only once
-    * they are older than `uncommittedGraceMs` (by the newest
-    * modification time among the directory and its direct children) —
-    * an uncommitted generation younger than the grace window may be a
-    * refresh/trace currently writing, and a concurrent vacuum must
-    * not destroy it mid-run; a genuinely crashed straggler ages past
-    * the grace and is reclaimed on the next vacuum. The serving
-    * generation is untouched and the next [[pageRankRefresh]] chains
-    * from it unchanged. Returns the deleted roots. */
+    * committed ([[graft.util.Generations.vacuum]] with a zero soak:
+    * committed generations older than the serving one go at once).
+    * UNCOMMITTED stragglers go only once older than
+    * `uncommittedGraceMs` — a younger one may be a refresh/trace
+    * currently writing; a genuinely crashed straggler ages past the
+    * grace and is reclaimed on the next vacuum. The serving generation
+    * is untouched and the next [[pageRankRefresh]] chains from it
+    * unchanged. Returns the deleted roots. */
   def vacuumRankTrace(spark: org.apache.spark.sql.SparkSession,
                       dir: String,
                       uncommittedGraceMs: Long = 6L * 3600L * 1000L)
@@ -711,27 +671,9 @@ object LinkGraph {
     require(uncommittedGraceMs >= 0,
       s"vacuumRankTrace: uncommittedGraceMs must be >= 0, got " +
         uncommittedGraceMs)
-    val serving = latestTraceGen(spark, dir).getOrElse(return Nil)
-    val servingName = new org.apache.hadoop.fs.Path(serving).getName
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = traceFs(spark, dir)
-    val now = System.currentTimeMillis()
-    def newestMtime(st: org.apache.hadoop.fs.FileStatus): Long =
-      (st.getModificationTime +:
-        fs.listStatus(st.getPath).map(_.getModificationTime).toSeq).max
-    val deleted = collection.mutable.ArrayBuffer.empty[String]
-    fs.listStatus(p)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("gen-")
-        && st.getPath.getName != servingName)
-      .foreach { st =>
-        val committed = fs.exists(
-          new org.apache.hadoop.fs.Path(st.getPath, TraceCommit))
-        if (committed || now - newestMtime(st) > uncommittedGraceMs) {
-          fs.delete(st.getPath, true)
-          deleted += st.getPath.toString
-        }
-      }
-    deleted.toSeq
+    val serving = Gens.resolve(spark, dir)
+    if (serving.isEmpty) Nil
+    else Gens.vacuum(spark, dir, serving, 0L, uncommittedGraceMs)
   }
 
   /** Gate a document frame on its host's prior: keep rows whose host

@@ -600,7 +600,7 @@ object Packing {
     // FIFO keeps the critical path prioritized
     var written: Set[Long] = Set.empty
     var oldManifest: DataFrame = null
-    inParallel(
+    graft.util.Par.inParallel(
       () => sharded.repartition(col("shard"))
         .sortWithinPartitions(col("shard"), col("rank"))
         .write.partitionBy("shard")
@@ -944,27 +944,6 @@ object Packing {
     * joined with a re-aggregation of the written pack data —
     * the same audit frame the single-phase product returns, with the
     * phase dimension in front. */
-  /** Run INDEPENDENT side-effect stages concurrently (optimization
-    * guide §2.6): stages must touch disjoint outputs and read only
-    * materialized inputs; results equal the sequential composition by
-    * construction, and the first failure propagates with its original
-    * exception. Stages submit in order — FIFO scheduling prioritizes
-    * the first (put the critical path first). */
-  private def inParallel(stages: (() => Unit)*): Unit = {
-    if (stages.isEmpty) return
-    if (stages.size == 1) { stages.head.apply(); return }
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(stages.size)
-    try {
-      val futs = stages.map(f => pool.submit(
-        new java.util.concurrent.Callable[Unit] { def call(): Unit = f() }))
-      futs.foreach { fu =>
-        try fu.get()
-        catch { case e: java.util.concurrent.ExecutionException =>
-          throw e.getCause }
-      }
-    } finally pool.shutdown()
-  }
-
   def phasedShards(docs: DataFrame, idCol: String, textCol: String,
                    domainCol: String, phases: Seq[Mixing.MixPhase],
                    packBudget: Long, dir: String, nShards: Int,

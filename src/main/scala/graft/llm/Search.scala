@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.util.{Generations, Par}
 
 /** Lexical corpus retrieval — Okapi BM25 (Robertson & Zaragoza, "The
   * Probabilistic Relevance Framework: BM25 and Beyond", 2009; the
@@ -216,16 +217,12 @@ object Search {
 
   // ---- persisted-index layout: base + committed delta events ----------
 
-  /** Marker whose creation is the SINGLE visibility point of a
-    * maintenance event: all of the delta directory's data files exist
-    * before it, so an interrupted append/retraction is invisible to
-    * readers and safely retryable (the crash mid-sequence can no
-    * longer leave tf/df/n inconsistent). */
-  private val DeltaCommit = "_graft_delta_committed"
-
-  private def fsOf(spark: SparkSession, dir: String) =
-    new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
+  /** The index's [[graft.util.Generations]]: `gen-NNNN` bases and,
+    * under the serving base, `delta-NNNN` maintenance events, each
+    * visible only once its marker lands — an interrupted
+    * append/retraction is invisible to readers and safely retryable
+    * (a crash mid-sequence cannot leave tf/df/n inconsistent). */
+  private val Gens = Generations("_graft_delta_committed", first = 0)
 
   /** Resolved read-view of a postings index directory. `root` is the
     * serving base — the latest committed `gen-NNNN` child
@@ -244,40 +241,18 @@ object Search {
                                 statsPath: String,
                                 tombstonesPath: Option[String])
 
-  /** Numeric suffix of a `prefix-NNNN` child name — None for foreign
-    * directories, so a stray non-numeric name can neither crash the
-    * resolver nor be adopted as an event. Parsing (not lexical
-    * sorting) is what keeps ordering correct past the %04d padding:
-    * `delta-10000` must sort AFTER `delta-9999`, or readers silently
-    * adopt stale df/stats and an older tombstone set. */
-  private def numberedSuffix(name: String, prefix: String): Option[Int] = {
-    val s = name.stripPrefix(prefix)
-    if (s.nonEmpty && s.forall(_.isDigit)) Some(s.toInt) else None
-  }
-
   /** Resolve the serving view: serving root (latest committed
     * generation, else the legacy flat layout), its base files, plus
-    * every COMMITTED `delta-NNNN` event under it, ordered by PARSED
-    * event number. df/stats come from the latest committed event
-    * (each event persists the full post-event tables); tombstones
-    * from the latest event carrying them (retractions write the
-    * CUMULATIVE set; appends never shrink it). */
+    * every COMMITTED `delta-NNNN` event under it, ordered by event
+    * number. df/stats come from the latest committed event (each event
+    * persists the full post-event tables); tombstones from the latest
+    * event carrying them (retractions write the CUMULATIVE set;
+    * appends never shrink it). */
   private def resolveIndex(spark: SparkSession, dir: String): IndexState = {
-    val fs = fsOf(spark, dir)
-    def committedChildren(parent: String, prefix: String)
-        : Seq[org.apache.hadoop.fs.Path] = {
-      val p = new org.apache.hadoop.fs.Path(parent)
-      if (!fs.exists(p)) Seq.empty
-      else fs.listStatus(p)
-        .filter(st => st.isDirectory &&
-          numberedSuffix(st.getPath.getName, prefix).nonEmpty &&
-          fs.exists(new org.apache.hadoop.fs.Path(st.getPath, DeltaCommit)))
-        .sortBy(st => numberedSuffix(st.getPath.getName, prefix).get)
-        .map(_.getPath).toSeq
-    }
-    val root = committedChildren(dir, "gen-").lastOption
-      .map(_.toString).getOrElse(dir)
-    val deltas = committedChildren(root, "delta-")
+    val fs = Generations.fsOf(spark, dir)
+    val root = Gens.resolve(spark, dir).getOrElse(dir)
+    val deltas = Gens.committed(spark, root, "delta-")
+      .map(new org.apache.hadoop.fs.Path(_))
     def sub(parent: org.apache.hadoop.fs.Path, name: String)
         : Option[String] = {
       val sp = new org.apache.hadoop.fs.Path(parent, name)
@@ -314,31 +289,6 @@ object Search {
   def servingStats(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(resolveIndex(spark, dir).statsPath)
 
-  /** Next numbered child (`delta-NNNN` events, `gen-NNNN` compaction
-    * roots): uncommitted leftovers (a crashed writer — invisible to
-    * readers by construction) are reclaimed first, then the next
-    * number after the last committed one. Single-writer maintenance
-    * contract. */
-  private def nextNumbered(spark: SparkSession, dir: String,
-                           prefix: String): String = {
-    val fs = fsOf(spark, dir)
-    val p = new org.apache.hadoop.fs.Path(dir)
-    var maxCommitted = -1
-    if (fs.exists(p)) fs.listStatus(p)
-      .filter(st => st.isDirectory &&
-        numberedSuffix(st.getPath.getName, prefix).nonEmpty)
-      .foreach { st =>
-        if (fs.exists(new org.apache.hadoop.fs.Path(st.getPath, DeltaCommit)))
-          maxCommitted = math.max(maxCommitted,
-            numberedSuffix(st.getPath.getName, prefix).get)
-        else fs.delete(st.getPath, true)
-      }
-    f"$dir/$prefix${maxCommitted + 1}%04d"
-  }
-
-  private def nextDeltaDir(spark: SparkSession, dir: String): String =
-    nextNumbered(spark, dir, "delta-")
-
   /** Scale-ADAPTIVE postings shard count (optimization guide §2/§6):
     * the caller's `shards` is the CAP (the production knob for a
     * corpus that needs the fan-out), but the written file count
@@ -352,35 +302,6 @@ object Search {
   private def adaptiveShards(cap: Int, tokenMass: Double): Int =
     math.min(cap.toLong,
       math.max(1L, math.ceil(tokenMass / 16e6).toLong)).toInt
-
-  private def commitDelta(spark: SparkSession, deltaDir: String): Unit = {
-    val m = new org.apache.hadoop.fs.Path(deltaDir, DeltaCommit)
-    fsOf(spark, deltaDir).create(m, true).close()
-  }
-
-  /** Run INDEPENDENT side-effect stages concurrently (optimization
-    * guide §2.6): stages must touch disjoint outputs and read only
-    * materialized/immutable inputs; results equal the sequential
-    * composition by construction, and the first failure propagates
-    * with its original exception. Stages submit in order — FIFO
-    * scheduling prioritizes the first (put the critical path first).
-    * Event writers use it for the surface writes of one UNCOMMITTED
-    * generation/delta dir: the marker-last commit stays after every
-    * write, so the crash contract is unchanged. */
-  private def inParallel(stages: (() => Unit)*): Unit = {
-    if (stages.isEmpty) return
-    if (stages.size == 1) { stages.head.apply(); return }
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(stages.size)
-    try {
-      val futs = stages.map(f => pool.submit(
-        new java.util.concurrent.Callable[Unit] { def call(): Unit = f() }))
-      futs.foreach { fu =>
-        try fu.get()
-        catch { case e: java.util.concurrent.ExecutionException =>
-          throw e.getCause }
-      }
-    } finally pool.shutdown()
-  }
 
   private def readStatsRow(spark: SparkSession, state: IndexState) =
     spark.read.parquet(state.statsPath).head()
@@ -475,13 +396,13 @@ object Search {
         col("__dl").as("dl"))
       .localCheckpoint()
     val dfreq = postings.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val gen = nextNumbered(spark, dir, "gen-")
+    val gen = Gens.next(spark, dir)
     // the four surface writes read only the two checkpointed frames
     // and land in disjoint subdirs of the UNCOMMITTED generation —
     // overlap them (§2.6; the marker-last commit below is unchanged,
     // so a failed write still leaves an invisible generation). The
     // postings write is the critical path — submitted first.
-    inParallel(
+    Par.inParallel(
       () => postings
         .repartitionByRange(adaptiveShards(shards, sumDl), col("term"))
         .sortWithinPartitions("term")
@@ -493,7 +414,7 @@ object Search {
           lit(sumDl).as("sum_dl"),
           lit(idCol).as("id_col"), lit(textCol).as("text_col"))
         .coalesce(1).write.mode("overwrite").parquet(s"$gen/stats"))
-    commitDelta(spark, gen)
+    Gens.commit(spark, gen)
     // the two localCheckpoint RDD blocks release via the session's
     // persistent-RDD sweep (Dataset.unpersist only reaches the cache
     // registry, not checkpoint blocks — the Bench/clearCache caveat)
@@ -556,14 +477,14 @@ object Search {
         col("__dl").as("dl"))
       .localCheckpoint()
     val dfNew = newPostings.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val delta = nextDeltaDir(spark, state.root)
+    val delta = Gens.next(spark, state.root, "delta-")
     val n2 = n + nNew
     val sum2 = sumDl + sumNew
     // four independent writes into the UNCOMMITTED event dir — overlap
     // them (§2.6, the buildPostings convention; marker-last commit
     // keeps the crash contract). The df merge only READS the previous
     // event's df table, never overwrites in place.
-    inParallel(
+    Par.inParallel(
       () => newPostings
         .repartitionByRange(adaptiveShards(shards, sumNew), col("term"))
         .sortWithinPartitions("term")
@@ -578,7 +499,7 @@ object Search {
           lit(sum2).as("sum_dl"),
           lit(idCol).as("id_col"), lit(textCol).as("text_col"))
         .coalesce(1).write.mode("overwrite").parquet(s"$delta/stats"))
-    commitDelta(spark, delta)
+    Gens.commit(spark, delta)
   }
 
   /** LEXICAL TAKEDOWN — retract documents from a [[buildPostings]]
@@ -648,7 +569,7 @@ object Search {
     // independent read-only jobs — overlap them (§2.6)
     var dfOldCount = 0L
     var newDf: DataFrame = null
-    inParallel(
+    Par.inParallel(
       () => newDf = dfOld.join(dfDelta, Seq("term"), "left")
         .select(col("term"),
           (col("df") - coalesce(col("__gone"), lit(0L))).as("df"))
@@ -659,12 +580,12 @@ object Search {
     val prevTomb = state.tombstonesPath
       .map(tp => spark.read.parquet(tp))
       .getOrElse(present.select(col(ixIdCol)).limit(0))
-    val delta = nextDeltaDir(spark, state.root)
+    val delta = Gens.next(spark, state.root, "delta-")
     val n2 = n - nRemoved
     val sum2 = sumDl - sumRemoved
     // three independent writes into the UNCOMMITTED event dir (§2.6;
     // marker-last commit keeps the crash contract)
-    inParallel(
+    Par.inParallel(
       () => newDf.write.mode("overwrite").parquet(s"$delta/df"),
       () => spark.range(1)
         .select(lit(n2).as("n"), lit(sum2 / n2).as("avgdl"),
@@ -673,7 +594,7 @@ object Search {
         .coalesce(1).write.mode("overwrite").parquet(s"$delta/stats"),
       () => prevTomb.unionByName(present.select(col(ixIdCol))).distinct()
         .write.mode("overwrite").parquet(s"$delta/tombstones"))
-    commitDelta(spark, delta)
+    Gens.commit(spark, delta)
     audit(nRemoved, suppressed, termsDropped, n2)
   }
 
@@ -693,8 +614,8 @@ object Search {
     * serving is lock-free, so an in-flight reader that resolved the
     * pre-compaction state must be able to finish its scans, and a
     * separate [[vacuumPostings]] reclaims retired generations once
-    * the swap has soaked (the `vacuumRankTrace` grace-window
-    * convention). Serving before and after is bit-identical (spec +
+    * the swap has soaked (the [[graft.util.Generations.vacuum]]
+    * soak/grace rules). Serving before and after is bit-identical (spec +
     * oracle-bound); tombstones clear because their rows are physically
     * gone. Same single-maintainer contract as the other writers.
     *
@@ -714,13 +635,13 @@ object Search {
       case None => postings
     }
     val eventsFolded = (state.postingsPaths.size - 1).toLong
-    val gen = nextNumbered(spark, dir, "gen-")
+    val gen = Gens.next(spark, dir)
     // the fold write, the carried-surface copies and the tombstone
     // audit count are independent (disjoint subdirs of the UNCOMMITTED
     // generation; read-only sources) — overlap them (§2.6), postings
     // fold first (critical path). Marker-last commit unchanged.
     var tombCount = 0L
-    inParallel(
+    Par.inParallel(
       () => live.repartitionByRange(
           adaptiveShards(shards, st.getAs[Double]("sum_dl")), col("term"))
         .sortWithinPartitions("term")
@@ -733,7 +654,7 @@ object Search {
         .coalesce(1).write.mode("overwrite").parquet(s"$gen/stats"),
       () => tombCount = state.tombstonesPath
         .map(tp => spark.read.parquet(tp).count()).getOrElse(0L))
-    commitDelta(spark, gen)
+    Gens.commit(spark, gen)
     spark.range(1).select(
       lit(st.getAs[Long]("n")).as("n_docs"),
       lit(spark.read.parquet(s"$gen/postings").count())
@@ -745,56 +666,26 @@ object Search {
   /** Garbage-collect RETIRED postings surfaces — the reclamation half
     * that [[buildPostings]]/[[compactPostings]] deliberately do NOT
     * perform (serving is lock-free; a reader that resolved the old
-    * state must finish its scans — the
-    * [[graft.llm.LinkGraph.vacuumRankTrace]] convention). Reclaims,
-    * under one `graceMs` window:
+    * state must finish its scans). [[graft.util.Generations.vacuum]]
+    * with one `graceMs` window as both soak and grace reclaims:
     *  - retired COMMITTED generations (and a legacy flat base's data
-    *    dirs + flat-era deltas) — only once the SERVING generation's
-    *    commit is older than `graceMs`: "the swap has soaked", so any
-    *    reader that resolved the pre-swap state has long finished;
-    *  - UNCOMMITTED `gen-`/`delta-` stragglers — only once their own
-    *    newest modification time is older than `graceMs`: younger ones
-    *    may be a writer currently mid-build (single-maintainer covers
-    *    writers racing each other, not a vacuum racing the maintainer).
-    * A never-compacted legacy flat index has nothing retired — no-op.
-    * After a vacuum, rollback means rebuilding, not marker deletion —
-    * the [[graft.llm.Similarity.vacuumIndex]] trade, opted into
-    * explicitly. Returns the deleted paths. */
+    *    dirs + flat-era deltas) once the serving generation's commit
+    *    has soaked;
+    *  - UNCOMMITTED `gen-`/`delta-` stragglers — beside the serving
+    *    generation and under it (a crashed append/retraction) — once
+    *    their newest modification time has aged past the window.
+    * A never-compacted legacy flat index has nothing retired; only its
+    * stragglers go. Returns the deleted paths. */
   def vacuumPostings(spark: SparkSession, dir: String,
                      graceMs: Long = 6L * 3600L * 1000L): Seq[String] = {
     require(graceMs >= 0,
       s"vacuumPostings: graceMs must be >= 0, got $graceMs")
-    val fs = fsOf(spark, dir)
-    val p = new org.apache.hadoop.fs.Path(dir)
-    if (!fs.exists(p)) return Nil
-    val state = resolveIndex(spark, dir)
-    if (state.root == dir) return Nil // flat only — nothing retired
-    val servingName = new org.apache.hadoop.fs.Path(state.root).getName
-    val now = System.currentTimeMillis()
-    val soaked = now - fs.getFileStatus(
-      new org.apache.hadoop.fs.Path(state.root, DeltaCommit))
-      .getModificationTime > graceMs
-    def newestMtime(st: org.apache.hadoop.fs.FileStatus): Long =
-      (st.getModificationTime +:
-        fs.listStatus(st.getPath).map(_.getModificationTime).toSeq).max
-    val flatData = Set("postings", "df", "stats", "ids", "tombstones")
-    val deleted = collection.mutable.ArrayBuffer.empty[String]
-    fs.listStatus(p).foreach { st =>
-      val name = st.getPath.getName
-      val retired =
-        if (name == servingName || !st.isDirectory) false
-        else if (name.startsWith("gen-") || name.startsWith("delta-")) {
-          val committed = fs.exists(
-            new org.apache.hadoop.fs.Path(st.getPath, DeltaCommit))
-          if (committed) soaked // retired by the serving gen's commit
-          else now - newestMtime(st) > graceMs // maybe mid-write
-        } else flatData.contains(name) && soaked // legacy flat base
-      if (retired) {
-        fs.delete(st.getPath, true)
-        deleted += st.getPath.toString
-      }
-    }
-    deleted.toSeq
+    val serving = Gens.resolve(spark, dir)
+    val retired = if (serving.isEmpty) Nil else Gens.vacuum(spark, dir,
+      serving, graceMs, graceMs, Seq("gen-", "delta-"),
+      Set("postings", "df", "stats", "ids", "tombstones"))
+    retired ++ Gens.vacuum(spark, serving.getOrElse(dir), None, graceMs,
+      graceMs, Seq("delta-"))
   }
 
   private def readStats(spark: SparkSession, state: IndexState)

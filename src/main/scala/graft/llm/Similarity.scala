@@ -524,70 +524,27 @@ object Similarity {
 
   // ---- Index generations: drift-triggered reindex, atomic swap ------
 
-  /** Marker file whose presence makes a generation directory VISIBLE
-    * to readers: every data file of the generation is fully written
-    * before the marker is created, so a reader either resolves the
-    * complete new generation or keeps the previous one — never a
-    * half-written mix (the parquet `_SUCCESS` idea lifted one level,
-    * to the whole index). */
-  private val GenCommitMarker = "_GRAFT_COMMITTED"
+  /** The index's [[graft.util.Generations]]: a reindex/compaction
+    * lands a whole `gen-NNNN` directory, marker last, so a reader
+    * either resolves the complete new generation or keeps the previous
+    * one — the parquet `_SUCCESS` idea lifted to the whole index. The
+    * flat build counts as generation 0, so the first child is
+    * `gen-0001`. */
+  private val Gens = graft.util.Generations("_GRAFT_COMMITTED", first = 1)
 
-  private def hadoopFs(spark: org.apache.spark.sql.SparkSession,
-                       path: org.apache.hadoop.fs.Path) =
-    path.getFileSystem(spark.sessionState.newHadoopConf())
-
-  /** The SERVING root of a possibly multi-generation index: the
-    * lexicographically greatest `gen-NNNN` child carrying the commit
-    * marker, else `dir` itself (the flat layout every build writes —
-    * full back-compat; an index that was never reindexed has no
+  /** The SERVING root of a possibly multi-generation index: the latest
+    * committed `gen-NNNN` child, else `dir` itself (the flat layout
+    * every build writes — an index that was never reindexed has no
     * generation children). Idempotent: a generation directory has no
     * `gen-*` children, so resolving one returns it unchanged. Every
     * index reader/appender resolves through here ONCE per operation
     * (streaming consumers once per MICRO-BATCH — that per-batch
     * re-read is exactly what makes a [[reindexIvf]] swap invisible to
     * a serving stream: the next batch simply resolves the new
-    * generation). Goes through the Hadoop FileSystem API so HDFS/S3
-    * indexes resolve the same as local ones. */
+    * generation). */
   def resolveIndexRoot(spark: org.apache.spark.sql.SparkSession,
-                       dir: String): String = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = hadoopFs(spark, p)
-    if (!fs.exists(p)) return dir
-    val gens = fs.listStatus(p)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("gen-"))
-      .map(_.getPath)
-      .filter(g => fs.exists(new org.apache.hadoop.fs.Path(g, GenCommitMarker)))
-    // numeric, not lexical: past the %04d padding gen-10000 must
-    // outrank gen-9999 (nextGenDir already parses numerically — a
-    // lexical max would silently keep serving the older generation)
-    if (gens.isEmpty) dir
-    else gens.maxBy { g =>
-      val s = g.getName.stripPrefix("gen-").takeWhile(_.isDigit)
-      if (s.isEmpty) -1 else s.toInt
-    }.toString
-  }
-
-  /** Next generation directory under `dir` — counts EVERY `gen-*`
-    * child (committed or not), so a crashed half-written reindex never
-    * collides with the retry; zero-padded for lexicographic order. */
-  private def nextGenDir(spark: org.apache.spark.sql.SparkSession,
-                         dir: String): String = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = hadoopFs(spark, p)
-    val n = if (!fs.exists(p)) 0
-      else fs.listStatus(p).map(_.getPath.getName)
-        .collect { case g if g.startsWith("gen-") =>
-          g.stripPrefix("gen-").takeWhile(_.isDigit) }
-        .collect { case s if s.nonEmpty => s.toInt }
-        .foldLeft(0)(math.max)
-    f"$dir/gen-${n + 1}%04d"
-  }
-
-  private def commitGen(spark: org.apache.spark.sql.SparkSession,
-                        genDir: String): Unit = {
-    val m = new org.apache.hadoop.fs.Path(genDir, GenCommitMarker)
-    hadoopFs(spark, m).create(m, true).close()
-  }
+                       dir: String): String =
+    Gens.resolve(spark, dir).getOrElse(dir)
 
   /** REINDEX a persisted IVF index — the closing arc of the index
     * lifecycle (build → persist → append → probe → audit → drift →
@@ -615,9 +572,9 @@ object Similarity {
     val root = resolveIndexRoot(spark, dir)
     val corpus = spark.read.parquet(s"$root/assignments")
       .select(col("neighbor_id").as("vec_id"), col("__cv").as("embedding"))
-    val gen = nextGenDir(spark, dir)
+    val gen = Gens.next(spark, dir)
     buildIvfIndex(corpus, gen, nCentroids, seed)
-    commitGen(spark, gen)
+    Gens.commit(spark, gen)
     gen
   }
 
@@ -734,9 +691,9 @@ object Similarity {
                 corpus: DataFrame, m: Int = 8, k: Int = 16,
                 cIdCol: String = "vec_id",
                 vecCol: String = "embedding"): String = {
-    val gen = nextGenDir(spark, dir)
+    val gen = Gens.next(spark, dir)
     buildPqIndex(corpus, gen, m, k, cIdCol, vecCol)
-    commitGen(spark, gen)
+    Gens.commit(spark, gen)
     gen
   }
 
@@ -748,9 +705,9 @@ object Similarity {
                    m: Int = 8, k: Int = 16, seed: Long = 42L,
                    cIdCol: String = "vec_id",
                    vecCol: String = "embedding"): String = {
-    val gen = nextGenDir(spark, dir)
+    val gen = Gens.next(spark, dir)
     buildIvfPqIndex(corpus, gen, nCentroids, m, k, seed, cIdCol, vecCol)
-    commitGen(spark, gen)
+    Gens.commit(spark, gen)
     gen
   }
 
@@ -770,48 +727,15 @@ object Similarity {
     * it is purely a disk-cost bound.
     *
     * `graceMs` (default 0 — immediate, the historical audit-query
-    * behavior) applies the [[graft.llm.Search.vacuumPostings]]
-    * discipline for standing deployments: retired surfaces reclaim
-    * only once the SERVING generation's commit is older than the
-    * window (lock-free readers that resolved pre-swap finish their
-    * scans), and an UNCOMMITTED generation reclaims only once its own
-    * newest modification time ages past it — younger ones may be a
-    * reindex currently writing. */
+    * behavior) is both the soak and the grace window of
+    * [[graft.util.Generations.vacuum]] for standing deployments. */
   def vacuumIndex(spark: org.apache.spark.sql.SparkSession,
                   dir: String, graceMs: Long = 0L): Seq[String] = {
     require(graceMs >= 0, s"vacuumIndex: graceMs must be >= 0, got $graceMs")
-    val serving = resolveIndexRoot(spark, dir)
-    if (serving == dir) return Nil // flat only — nothing retired
-    val dp = new org.apache.hadoop.fs.Path(dir)
-    val fs = hadoopFs(spark, dp)
-    val servingName = new org.apache.hadoop.fs.Path(serving).getName
-    val now = System.currentTimeMillis()
-    val soaked = graceMs == 0L || now - fs.getFileStatus(
-      new org.apache.hadoop.fs.Path(serving, GenCommitMarker))
-      .getModificationTime > graceMs
-    def agedOut(st: org.apache.hadoop.fs.FileStatus): Boolean =
-      graceMs == 0L || now - (st.getModificationTime +:
-        fs.listStatus(st.getPath).map(_.getModificationTime).toSeq).max >
-        graceMs
-    val deleted = collection.mutable.ArrayBuffer.empty[String]
-    if (soaked)
-      for (sub <- Seq("centroids", "coarse", "assignments", "codebooks",
-          "codes")) {
-        val p = new org.apache.hadoop.fs.Path(dp, sub)
-        if (fs.exists(p)) { fs.delete(p, true); deleted += p.toString }
-      }
-    fs.listStatus(dp)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("gen-")
-        && st.getPath.getName != servingName)
-      .foreach { st =>
-        val committed = fs.exists(
-          new org.apache.hadoop.fs.Path(st.getPath, GenCommitMarker))
-        if (if (committed) soaked else agedOut(st)) {
-          fs.delete(st.getPath, true)
-          deleted += st.getPath.toString
-        }
-      }
-    deleted.toSeq
+    val serving = Gens.resolve(spark, dir)
+    if (serving.isEmpty) return Nil // flat only — nothing retired
+    Gens.vacuum(spark, dir, serving, graceMs, graceMs, legacy =
+      Set("centroids", "coarse", "assignments", "codebooks", "codes"))
   }
 
   /** COMPACT an appended vector index — fold the accumulated
@@ -845,7 +769,7 @@ object Similarity {
       s"compactVectorIndex: shards must be >= 1, got $shards")
     val root = resolveIndexRoot(spark, dir)
     val rp = new org.apache.hadoop.fs.Path(root)
-    val fs = hadoopFs(spark, rp)
+    val fs = graft.util.Generations.fsOf(spark, root)
     def has(name: String) =
       fs.exists(new org.apache.hadoop.fs.Path(rp, name))
     def dataFiles(base: String, sub: String): Long = {
@@ -868,7 +792,7 @@ object Similarity {
           "(expected assignments or codes)")
     val dataSub = if (kind == "ivf") "assignments" else "codes"
     val before = dataFiles(root, dataSub)
-    val gen = nextGenDir(spark, dir)
+    val gen = Gens.next(spark, dir)
     // the data fold (critical path) and the carried-table copies land
     // in disjoint subdirs of the UNCOMMITTED generation — overlap them
     // (guide §2.6); the marker-last commit below is unchanged
@@ -895,7 +819,7 @@ object Similarity {
             .write.mode("overwrite").parquet(s"$gen/codes"),
           () => copyTable("codebooks", gen))
     }
-    commitGen(spark, gen)
+    Gens.commit(spark, gen)
     val genName = new org.apache.hadoop.fs.Path(gen).getName
     spark.range(1).select(
       lit(kind).as("kind"), lit(genName).as("generation"),

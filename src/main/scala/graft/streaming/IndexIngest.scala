@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.llm.Similarity
+import graft.util.{Generations, Par}
 
 /** Continuous ANN-index ingestion — the streaming twins of
   * [[graft.llm.Similarity.appendPqIndex]] /
@@ -58,29 +59,6 @@ object IndexIngest {
       else spark.read).parquet(path)
     if (cached == null) memo.set(df.schema)
     df
-  }
-
-  /** Run INDEPENDENT side-effect stages concurrently (optimization
-    * guide §2.6): ledger writes that touch DISJOINT directories and
-    * share no frame mutation overlap one stage's planning/commit with
-    * another's execution — at any cluster size the concurrent jobs
-    * back-fill the executor pool each small write underuses alone.
-    * Results are identical to the sequential composition by
-    * construction; the first failure propagates with its original
-    * exception. */
-  private def inParallel(stages: (() => Unit)*): Unit = {
-    if (stages.isEmpty) return
-    if (stages.size == 1) { stages.head.apply(); return }
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(stages.size)
-    try {
-      val futs = stages.map(f => pool.submit(
-        new java.util.concurrent.Callable[Unit] { def call(): Unit = f() }))
-      futs.foreach { fu =>
-        try fu.get()
-        catch { case e: java.util.concurrent.ExecutionException =>
-          throw e.getCause }
-      }
-    } finally pool.shutdown()
   }
 
   /** The two driver scalars every pack append needs from the existing
@@ -666,7 +644,7 @@ object IndexIngest {
     }).localCheckpoint(true)
     // the three ledger writes read only the CHECKPOINTED survivor frame
     // and land in disjoint directories — overlap them (guide §2.6)
-    inParallel(
+    Par.inParallel(
       Seq(
         () => graft.llm.Packing.packSequences(survivors, idCol,
             wsTokens(textCol), budget)
@@ -767,7 +745,7 @@ object IndexIngest {
         // the three ledger appends read only the CHECKPOINTED survivor
         // frame and land in disjoint directories — overlap them (§2.6)
         // instead of serializing three tiny write jobs per micro-batch
-        inParallel(
+        Par.inParallel(
           Seq(
             () => graft.llm.Packing.packSequencesAppend(fresh, idCol,
                 wsTokens(textCol), budget, startOffset,
@@ -836,7 +814,7 @@ object IndexIngest {
                      targetBytes: Long = 128L << 20): Map[String, (Int, Int)] = {
     // independent per-directory rewrites — overlap them (§2.6)
     val slots = new Array[Option[(Int, Int)]](subdirs.size)
-    inParallel(subdirs.zipWithIndex.map { case (sub, i) =>
+    Par.inParallel(subdirs.zipWithIndex.map { case (sub, i) =>
       () => slots(i) = compactDir(spark, s"$dir/$sub", targetBytes)
     }: _*)
     subdirs.zip(slots).collect { case (sub, Some(r)) => sub -> r }.toMap
@@ -952,7 +930,7 @@ object IndexIngest {
       // and the audit count back-fills.
       var before = 0L
       var keptCp: DataFrame = null
-      inParallel(
+      Par.inParallel(
         () => keptCp = kept.localCheckpoint(true),
         () => before = df.count())
       val after = keptCp.count()
@@ -1009,7 +987,7 @@ object IndexIngest {
             "left_anti")))
       }
     }
-    inParallel(stages.toSeq: _*)
+    Par.inParallel(stages.toSeq: _*)
     report ++= Seq(assignSlot(0), hashSlot(0), sigSlot(0)).filter(_ != null)
     spark.createDataFrame(report.toSeq)
       .toDF("ledger", "rows_before", "rows_removed", "rows_after")
@@ -1084,7 +1062,7 @@ object IndexIngest {
       // the assignment restore and the touched-pack re-queue are
       // independent appends of the same CHECKPOINTED frame into
       // disjoint directories — overlap them (§2.6)
-      inParallel(
+      Par.inParallel(
         () => toRestore.write.mode("append").parquet(s"$dir/assign"),
         // re-queue as touched-pack markers for the incremental refresh
         () => toRestore.withColumn("mode", lit("scrub"))
@@ -1126,7 +1104,7 @@ object IndexIngest {
           sSlot(0) = sn
         })
       }
-      inParallel(stages.toSeq: _*)
+      Par.inParallel(stages.toSeq: _*)
       if (hSlot(0) >= 0) report += (("hashes", hSlot(0)))
       if (sSlot(0) >= 0) report += (("sigs", sSlot(0)))
     }
@@ -1173,7 +1151,7 @@ object IndexIngest {
     // the three counts are independent read-only jobs — overlap them
     // (§2.6); concurrent actions on lazy frames are thread-safe
     var assigned = 0L; var pending = 0L; var applied = 0L
-    inParallel(
+    Par.inParallel(
       () => assigned = assign.join(broadcast(ids), Seq("doc_id"), "left_semi")
         .count(),
       () => pending = ledgerCount("retracted"),
@@ -1272,13 +1250,8 @@ object IndexIngest {
       scrub(root, prefix, "codes", "vec_id", Nil)
     }
     scrubRoot(dir, "")
-    val dp = new org.apache.hadoop.fs.Path(dir)
-    val fs = dp.getFileSystem(hconf)
-    if (fs.exists(dp))
-      fs.listStatus(dp)
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("gen-"))
-        .map(_.getPath).sortBy(_.getName)
-        .foreach(g => scrubRoot(g.toString, s"${g.getName}/"))
+    Generations.children(spark, dir, "gen-").foreach { g =>
+      scrubRoot(g, s"${new org.apache.hadoop.fs.Path(g).getName}/") }
     require(report.nonEmpty,
       s"retractFromVectorIndex: $dir has neither assignments nor codes — " +
         "not a persisted vector index")
@@ -1328,7 +1301,7 @@ object IndexIngest {
     // original fixed order
     val subs = Seq("assign", "hashes", "sigs", "retracted")
     val slots = new Array[(String, Long, Long, Long)](subs.size)
-    inParallel(subs.zipWithIndex.flatMap { case (sub, i) =>
+    Par.inParallel(subs.zipWithIndex.flatMap { case (sub, i) =>
       val p = new org.apache.hadoop.fs.Path(s"$dir/$sub")
       if (!p.getFileSystem(conf).exists(p)) None
       else Some(() => {

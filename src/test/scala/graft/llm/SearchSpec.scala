@@ -277,10 +277,17 @@ class SearchSpec extends SparkSpec {
     // serving ignores the uncommitted event entirely
     assert(Search.bm25ServeJoinTopK(spark, dir, bench, k = 5)
       .collect().map(_.toString).toSeq === before)
-    // the retry reclaims the crashed directory and commits atomically
+    // the retry numbers past the crashed directory and commits
+    // atomically; the straggler stays invisible until a vacuum
+    // reclaims it
     Search.appendPostings(spark, dir, docs.where(col("doc_id") % 7 === 0),
       shards = 2)
-    assert(new java.io.File(s"$crashed/_graft_delta_committed").exists())
+    assert(new java.io.File(s"$root/delta-0001/_graft_delta_committed")
+      .exists())
+    assert(!new java.io.File(s"$crashed/_graft_delta_committed").exists())
+    assert(Search.vacuumPostings(spark, dir, graceMs = 0L)
+      .exists(_.endsWith("/gen-0000/delta-0000")))
+    assert(!new java.io.File(crashed).exists())
     val fresh = java.nio.file.Files
       .createTempDirectory("graft_bm25_crash_fresh").toString
     Search.buildPostings(docs, fresh, shards = 4)
@@ -605,9 +612,16 @@ class SearchSpec extends SparkSpec {
       .limit(3).write.parquet(s"$dir/gen-0001/postings")
     assert(Search.bm25ServeJoinTopK(spark, dir, bench, k = 5)
       .orderBy("rank").collect().map(_.toString).toSeq === before)
-    // the retried rebuild reclaims the straggler and swaps atomically
+    // the retried rebuild numbers past the straggler and swaps
+    // atomically; the straggler stays invisible until a vacuum
+    // reclaims it
     Search.buildPostings(docs, dir, shards = 2)
-    assert(Search.servingRoot(spark, dir).endsWith("gen-0001"))
+    assert(Search.servingRoot(spark, dir).endsWith("gen-0002"))
+    assert(!new java.io.File(s"$dir/gen-0001/_graft_delta_committed")
+      .exists())
+    assert(Search.vacuumPostings(spark, dir, graceMs = 0L)
+      .exists(_.endsWith("/gen-0001")))
+    assert(!new java.io.File(s"$dir/gen-0001").exists())
     val fresh = java.nio.file.Files
       .createTempDirectory("graft_bm25_bcrash_f").toString
     Search.buildPostings(docs, fresh, shards = 2)
